@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..schema import TRANSCRIPTION, TRANSCRIPTION_DEFAULT
 from ..sources.metadata import first_wins
+from .sharding import SHARD_COLUMNS
 
 
 def lookup_join(
@@ -39,12 +40,22 @@ def lookup_join(
     (metadata fits on every worker). For metadata too big to broadcast,
     pass False: the three joins become shuffle joins on the key columns —
     same semantics, and AQE's skew handling covers hot keys.
+
+    Raises ``ValueError`` when a metadata key equals a column already on
+    ``files`` or a sharding column: the sinks could neither tell the two
+    apart nor write both under one name.
     """
     value_cols = sorted(
         c
         for c in metadata.columns
         if c not in ("relative_path", "file_name", "_line")
     )
+    clash = sorted(set(value_cols) & (set(files.columns) | SHARD_COLUMNS))
+    if clash:
+        raise ValueError(
+            f"metadata keys {clash} collide with engine columns of the "
+            f"same name; rename them in the metadata file"
+        )
 
     # The two hash indexes, first-record-wins per key (J2).
     by_rel = first_wins(metadata, "relative_path").select(

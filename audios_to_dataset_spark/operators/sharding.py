@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_FILES_PER_SHARD = 500  # --files-per-db default, src/main.rs:67-69
+SHARD_COLUMNS = frozenset({"shard", "row_in_shard"})  # added by assign_shards
 
 
 def assign_shards(

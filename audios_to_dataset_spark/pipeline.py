@@ -373,6 +373,23 @@ def run_pipeline(
     return rows
 
 
+def _flatten_audio(df: DataFrame, *engine_cols: str) -> DataFrame:
+    """A shard dataset's ``audio`` struct + ``duration`` + metadata
+    layout back to the flat columns the sinks take; ``engine_cols`` are
+    dropped along with the struct."""
+    meta = [
+        c for c in df.columns
+        if c not in ("audio", "duration", *engine_cols)
+    ]
+    return df.select(
+        F.col("audio.path").alias("relative_path"),
+        F.col("audio.bytes").alias("content"),
+        F.col("audio.sampling_rate").alias("sampling_rate"),
+        "duration",
+        *meta,
+    )
+
+
 def convert_duckdb_to_parquet(
     spark: SparkSession,
     input_dir: str,
@@ -393,17 +410,7 @@ def convert_duckdb_to_parquet(
     from .sinks.parquet_shards import write_manifest, write_parquet_shards
     from .sources.duckdb_source import read_duckdb_shards
 
-    df = read_duckdb_shards(spark, input_dir)
-    meta = [
-        c for c in df.columns if c not in ("shard", "id", "duration", "audio")
-    ]
-    flat = df.select(
-        F.col("audio.path").alias("relative_path"),
-        F.col("audio.bytes").alias("content"),
-        F.col("audio.sampling_rate").alias("sampling_rate"),
-        "duration",
-        *meta,
-    )
+    flat = _flatten_audio(read_duckdb_shards(spark, input_dir), "shard", "id")
     sharded = assign_shards(flat, files_per_shard)
     receipts = write_parquet_shards(
         sharded, output_dir, compression=compression
@@ -427,15 +434,7 @@ def convert_parquet_to_duckdb(
     their JSON text exactly as the reference stores them."""
     from .sinks.duckdb_sink import write_duckdb_shards
 
-    df = spark.read.parquet(input_dir)
-    meta = [c for c in df.columns if c not in ("audio", "duration")]
-    flat = df.select(
-        F.col("audio.path").alias("relative_path"),
-        F.col("audio.bytes").alias("content"),
-        F.col("audio.sampling_rate").alias("sampling_rate"),
-        "duration",
-        *meta,
-    )
+    flat = _flatten_audio(spark.read.parquet(input_dir))
     sharded = assign_shards(flat, files_per_shard)
     return write_duckdb_shards(sharded, output_dir).collect()
 

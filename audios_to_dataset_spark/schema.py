@@ -86,12 +86,6 @@ def widen_metadata_columns(
     return out
 
 
-def metadata_value_columns(df: DataFrame) -> list[str]:
-    """Metadata columns in lexicographic order — the reference's BTreeSet
-    iteration order (src/main.rs:148, 478)."""
-    return sorted(c for c in df.columns if c not in KEY_COLUMNS)
-
-
 def hf_feature(dt: T.DataType) -> dict:
     """Hugging Face `datasets` feature descriptor for one metadata column
     (metadata_feature_value, src/main.rs:249-259)."""

@@ -14,11 +14,10 @@ Reference behavior (/root/reference/src/main.rs:438-613):
 - pre-existing shard file deleted before write (S12, :732-735)
 
 Spark's native Parquet writer cannot emit custom footer keys or exact
-file names, so shards are written through pyarrow inside
-``applyInPandas`` — one task per shard, each producing its own file
-(SURVEY.md §7.4 item 1). This is the grouped-map sink pattern: fully
-distributed, no driver materialization, and safe because shard ids
-partition the rows.
+file names (SURVEY.md §7.4 item 1), so the ``audio`` struct is built
+JVM-side and each shard's Arrow table goes through one
+``pq.write_table`` inside the shared per-shard fan-out and atomic commit
+of :mod:`.shards`.
 """
 
 from __future__ import annotations
@@ -26,14 +25,14 @@ from __future__ import annotations
 import json
 import os
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import hf_feature
+from .shards import metadata_fields, write_shards
 
 ROW_GROUP_SIZE = 256  # src/main.rs:607
 
@@ -79,24 +78,14 @@ def hf_features_json(meta_fields: list[tuple[str, T.DataType]]) -> str:
     return json.dumps({"info": {"features": features}})
 
 
-def atomic_write_table(table: pa.Table, out_path: str, codec: str) -> None:
-    """S12 idempotent shard replace, made ATOMIC: write to
-    ``<name>.tmp`` and ``os.replace`` into place (the same courtesy the
-    manifest gets) — a reader of a live output dir can never observe a
-    torn shard, a failed write leaves the previous shard intact, and a
-    task retry just re-replaces."""
-    tmp_path = out_path + ".tmp"
-    try:
-        pq.write_table(
-            table,
-            tmp_path,
-            compression=codec,
-            row_group_size=ROW_GROUP_SIZE,
-        )
-        os.replace(tmp_path, out_path)
-    finally:
-        if os.path.exists(tmp_path):
-            os.remove(tmp_path)
+def _hf_audio() -> Column:
+    """The ``audio`` struct in the reference's parquet field order
+    (bytes/sampling_rate/path, src/main.rs:465-469)."""
+    return F.struct(
+        F.col("content").alias("bytes"),
+        F.col("sampling_rate"),
+        F.col("relative_path").alias("path"),
+    ).alias("audio")
 
 
 def write_parquet_shards(
@@ -104,12 +93,12 @@ def write_parquet_shards(
     output_dir: str,
     compression: str = "snappy",
 ) -> DataFrame:
-    """Write one ``<shard>.parquet`` per shard; returns a small DataFrame
-    of (shard, n_rows, out_path) write receipts.
+    """Write one ``<shard>.parquet`` per shard; returns the
+    :data:`.shards.RECEIPT_SCHEMA` write receipts, one row per shard.
 
     ``df`` must carry: shard, row_in_shard, relative_path, content,
-    duration, sampling_rate, and the widened metadata columns (everything
-    else is ignored).
+    duration, sampling_rate, and the widened metadata columns (the other
+    scan columns are ignored).
     """
     codec = COMPRESSION_MAP.get(compression.lower())
     if codec is None:
@@ -117,81 +106,29 @@ def write_parquet_shards(
             f"unknown compression {compression!r}; "
             f"one of {sorted(COMPRESSION_MAP)}"
         )
-    os.makedirs(output_dir, exist_ok=True)
-
-    fixed = {"shard", "row_in_shard", "relative_path", "content",
-             "duration", "sampling_rate", "path", "file_name", "length",
-             "modificationTime"}
-    meta_fields = sorted(
-        (f.name, f.dataType)
-        for f in df.schema.fields
-        if f.name not in fixed
-    )
-    features_json = hf_features_json(meta_fields)
-    arrow_fields = [
-        pa.field("audio", AUDIO_ARROW_TYPE),
-        pa.field("duration", pa.float64()),
-    ] + [pa.field(n, _arrow_type(dt)) for n, dt in meta_fields]
-    arrow_schema = pa.schema(
-        arrow_fields, metadata={"huggingface": features_json}
-    )
-
-    select_cols = [
-        "shard", "row_in_shard", "relative_path", "content",
-        "duration", "sampling_rate",
-    ] + [n for n, _ in meta_fields]
-    slim = df.select(*select_cols)
-
+    meta_fields = metadata_fields(df)
     meta_names = [n for n, _ in meta_fields]
-
-    def write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("row_in_shard")
-        shard = int(pdf["shard"].iloc[0])
-        out_path = os.path.join(output_dir, f"{shard}.parquet")
-        audio = pa.StructArray.from_arrays(
-            [
-                pa.array(list(pdf["content"]), pa.binary()),
-                pa.array(pdf["sampling_rate"].astype("int32"), pa.int32()),
-                pa.array(pdf["relative_path"], pa.string()),
-            ],
-            fields=list(AUDIO_ARROW_TYPE),
-        )
-        cols = [audio, pa.array(pdf["duration"].astype("float64"),
-                                pa.float64())]
-        for n, dt in meta_fields:
-            # from_pandas=True maps pandas NaN back to Parquet NULL —
-            # missing metadata must stay NULL (src/main.rs:486-509), not
-            # become a float NaN.
-            cols.append(
-                pa.array(pdf[n], _arrow_type(dt), from_pandas=True)
-            )
-        table = pa.Table.from_arrays(cols, schema=arrow_schema)
-        atomic_write_table(table, out_path, codec)
-        dur = pdf["duration"].astype("float64")
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "n_rows": [len(pdf)],
-                "out_path": [out_path],
-                "n_bytes": [os.path.getsize(out_path)],
-                "sum_duration": [float(dur.sum())],
-                "min_duration": [float(dur.min())],
-                "max_duration": [float(dur.max())],
-            }
-        )
-
-    receipt_schema = T.StructType(
+    arrow_schema = pa.schema(
         [
-            T.StructField("shard", T.LongType()),
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("out_path", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("sum_duration", T.DoubleType()),
-            T.StructField("min_duration", T.DoubleType()),
-            T.StructField("max_duration", T.DoubleType()),
+            pa.field("audio", AUDIO_ARROW_TYPE),
+            pa.field("duration", pa.float64()),
         ]
+        + [pa.field(n, _arrow_type(dt)) for n, dt in meta_fields],
+        metadata={"huggingface": hf_features_json(meta_fields)},
     )
-    return slim.groupBy("shard").applyInPandas(write_shard, receipt_schema)
+
+    def write_file(tmp_path: str, table: pa.Table) -> None:
+        pq.write_table(
+            table.select(arrow_schema.names).cast(arrow_schema),
+            tmp_path,
+            compression=codec,
+            row_group_size=ROW_GROUP_SIZE,
+        )
+
+    rows = df.select(
+        "shard", "row_in_shard", _hf_audio(), "duration", *meta_names
+    )
+    return write_shards(rows, output_dir, "parquet", write_file)
 
 
 MANIFEST_NAME = "_manifest.jsonl"
@@ -210,8 +147,6 @@ def write_manifest(receipts: list, output_dir: str) -> str:
     Driver-side by design: one row per SHARD (not per record), the same
     cardinality as the receipts the caller already collected.
     """
-    import json
-
     path = os.path.join(output_dir, MANIFEST_NAME)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -253,8 +188,6 @@ def read_pruned(
     can assert the prune actually fired; raises ``FileNotFoundError``
     when no manifest exists (fall back to a full read + filter — the
     zones are an optimization, never a correctness gate)."""
-    import json
-
     path = os.path.join(output_dir, MANIFEST_NAME)
     with open(path) as f:
         entries = [json.loads(line) for line in f if line.strip()]
@@ -289,7 +222,7 @@ def write_native_sharded(
 
     Trades the reference's exact ``<idx>.parquet`` naming, HF footer, and
     256-row groups for the native writer's scalability machinery (job
-    commit protocol, task retries, no pandas hop). Use the pyarrow sink
+    commit protocol, task retries, no Python hop). Use the pyarrow sink
     for HF-layout parity; use this when the output feeds Spark again.
     ``file_format`` may be ``parquet`` (default) or ``orc`` — ORC ships
     in Spark natively and reads back with the identical schema, for
@@ -301,21 +234,11 @@ def write_native_sharded(
     codec = COMPRESSION_MAP.get(compression.lower())
     if codec is None:
         raise ValueError(f"unknown compression {compression!r}")
-    fixed = {"shard", "row_in_shard", "relative_path", "content",
-             "duration", "sampling_rate", "path", "file_name", "length",
-             "modificationTime"}
-    meta_names = sorted(
-        f.name for f in df.schema.fields if f.name not in fixed
-    )
     out = df.select(
         "shard",
-        F.struct(
-            F.col("content").alias("bytes"),
-            F.col("sampling_rate"),
-            F.col("relative_path").alias("path"),
-        ).alias("audio"),
+        _hf_audio(),
         "duration",
-        *meta_names,
+        *[n for n, _ in metadata_fields(df)],
     )
     codec_name = codec.lower() if codec != "NONE" else "none"
     if file_format == "orc":

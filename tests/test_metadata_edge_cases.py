@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from audios_to_dataset_spark.schema import RESERVED_KEYS
@@ -143,6 +144,36 @@ def test_jsonl_number_types_widen_to_double(spark, tmp_path):
     assert dict(df.dtypes)["n"] == "double"
     got = {r.relative_path: r.n for r in df.collect()}
     assert got == {"a.wav": 3.0, "b.wav": 2.5}
+
+
+@pytest.mark.parametrize("output_format", ["parquet", "duckdb"])
+@pytest.mark.parametrize("key", ["length", "sampling_rate"])
+def test_metadata_key_colliding_with_engine_column_rejected(
+    spark, tmp_path, key, output_format
+):
+    """A metadata key named like an engine column can neither be told
+    apart from it nor written next to it: unchecked, ``length`` would
+    vanish from the output silently and ``sampling_rate`` would make the
+    sink's select ambiguous. The join rejects such keys by name before
+    any output."""
+    from audios_to_dataset_spark.functions.wav import synth_wav
+    from audios_to_dataset_spark.pipeline import run_pipeline
+
+    d = tmp_path / "audio"
+    d.mkdir()
+    (d / "a.wav").write_bytes(synth_wav(8000))
+    meta = tmp_path / "m.jsonl"
+    meta.write_text(
+        json.dumps({"relative_path": "a.wav", key: 7, "speaker": "x"})
+        + "\n"
+    )
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=f"'{key}'"):
+        run_pipeline(
+            spark, str(d), str(out), metadata_file=str(meta),
+            output_format=output_format,
+        )
+    assert not out.exists()
 
 
 def test_native_sharded_sink(spark, tmp_path):

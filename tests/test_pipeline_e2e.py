@@ -303,7 +303,18 @@ def test_duckdb_sink(spark, tmp_path, audio_dir):
         output_format="duckdb",
     )
     assert len(receipts) == 1
-    con = duckdb.connect(os.path.join(out, "0.duckdb"))
+    (rec,) = receipts
+    db_path = os.path.join(out, "0.duckdb")
+    assert rec.asDict() == {
+        "shard": 0,
+        "n_rows": 2,
+        "out_path": db_path,
+        "n_bytes": os.path.getsize(db_path),
+        "sum_duration": 2.0,
+        "min_duration": 1.0,
+        "max_duration": 1.0,
+    }
+    con = duckdb.connect(db_path)
     rows = con.execute(
         "SELECT id, duration, audio.path, audio.sampling_rate, "
         "audio.bytes, snr, tags, transcription, verified "
@@ -320,6 +331,71 @@ def test_duckdb_sink(spark, tmp_path, audio_dir):
     assert r[7] == "db text" and r[8] is True
     r2 = by_path["nested/with_path.wav"]
     assert r2[7] == "-" and r2[5] is None
+
+
+def test_row_groups_and_order_across_arrow_batches(spark, tmp_path):
+    """A shard spans many Arrow batches (100 records each here): its
+    parquet file still has row groups of exactly 256 rows except the
+    last, and its rows are in row_in_shard (relative_path) order."""
+    d = tmp_path / "audio"
+    d.mkdir()
+    n_files = 650
+    for i in range(n_files):
+        # duration identifies the file: (100 + i) samples at 8 kHz
+        (d / f"f{i:04d}.wav").write_bytes(
+            synth_wav(8000, n_samples=100 + i)
+        )
+    out = str(tmp_path / "out")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        receipts = run_pipeline(spark, str(d), out, files_per_shard=600)
+    finally:
+        spark.conf.set(key, prev)
+    assert sorted((r.shard, r.n_rows) for r in receipts) == [
+        (0, 600), (1, 50)
+    ]
+    first = 0
+    for shard, n in ((0, 600), (1, 50)):
+        path = os.path.join(out, f"{shard}.parquet")
+        meta = pq.ParquetFile(path).metadata
+        groups = [
+            meta.row_group(i).num_rows for i in range(meta.num_row_groups)
+        ]
+        assert groups == [256] * (n // 256) + [n % 256]
+        rows = pq.read_table(path).to_pylist()
+        want = range(first, first + n)
+        assert [r["audio"]["path"] for r in rows] == [
+            f"f{i:04d}.wav" for i in want
+        ]
+        assert [r["duration"] for r in rows] == [
+            (100 + i) / 8000 for i in want
+        ]
+        first += n
+
+
+def test_shard_sinks_plan_arrow_grouped_map(spark, tmp_path, audio_dir):
+    """Both shard sinks fan out with one Arrow grouped map behind one
+    shuffle on ``shard`` — no pandas grouped map."""
+    import contextlib
+    import io
+
+    from audios_to_dataset_spark.pipeline import build_dataset
+    from audios_to_dataset_spark.sinks.duckdb_sink import write_duckdb_shards
+    from audios_to_dataset_spark.sinks.parquet_shards import (
+        write_parquet_shards,
+    )
+
+    sharded = build_dataset(spark, audio_dir)
+    for write in (write_parquet_shards, write_duckdb_shards):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            write(sharded, str(tmp_path / write.__name__)).explain()
+        plan = buf.getvalue()
+        assert "FlatMapGroupsInArrow" in plan
+        assert "FlatMapGroupsInPandas" not in plan
+        assert plan.count("Exchange hashpartitioning(shard") == 1
 
 
 def test_first_wins_duplicate_metadata(spark, tmp_path, audio_dir):
@@ -682,41 +758,37 @@ def test_transcode_flac_pipeline(spark, tmp_path, audio_dir):
         )
 
 
-def test_atomic_shard_write_never_torn(tmp_path, monkeypatch):
-    """Kill the parquet write mid-shard: the output dir must never show
-    a torn <idx>.parquet — the previous shard survives untouched, the
+def test_atomic_shard_write_never_torn(tmp_path):
+    """Kill a shard write mid-file: the output dir must never show a
+    torn <idx>.parquet — the previous shard survives untouched, the
     .tmp is cleaned up, and a retry lands the new bytes atomically."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import pytest as _pytest
 
-    from audios_to_dataset_spark.sinks import parquet_shards as ps
+    from audios_to_dataset_spark.sinks.shards import atomic_write
 
     out = tmp_path / "0.parquet"
     t_old = pa.table({"x": [1, 2, 3]})
-    ps.atomic_write_table(t_old, str(out), "snappy")
+    atomic_write(str(out), lambda tmp: pq.write_table(t_old, tmp))
     old_bytes = out.read_bytes()
 
     t_new = pa.table({"x": [9, 9, 9, 9]})
-    real_write = pq.write_table
 
-    def _dying_write(table, where, **kw):
+    def _dying_write(where):
         # write a real (torn) prefix, then die — the half-written bytes
         # must only ever exist at the .tmp path
-        real_write(table, where, **kw)
+        pq.write_table(t_new, where)
         with open(where, "r+b") as f:
             f.truncate(10)
         raise OSError("simulated mid-write crash")
 
-    monkeypatch.setattr(ps.pq, "write_table", _dying_write)
-    with _pytest.raises(OSError, match="simulated"):
-        ps.atomic_write_table(t_new, str(out), "snappy")
+    with pytest.raises(OSError, match="simulated"):
+        atomic_write(str(out), _dying_write)
     assert out.read_bytes() == old_bytes  # previous shard intact
     assert not (tmp_path / "0.parquet.tmp").exists()  # tmp cleaned
     assert pq.read_table(str(out)).num_rows == 3
 
-    monkeypatch.setattr(ps.pq, "write_table", real_write)
-    ps.atomic_write_table(t_new, str(out), "snappy")
+    atomic_write(str(out), lambda tmp: pq.write_table(t_new, tmp))
     assert pq.read_table(str(out)).column("x").to_pylist() == [9, 9, 9, 9]
     assert not (tmp_path / "0.parquet.tmp").exists()
 
