@@ -24,7 +24,6 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -189,9 +188,3 @@ def audio_info(content: pd.Series) -> pd.DataFrame:
             "est": [e for _, _, _, e in out],
         }
     )
-
-
-def with_audio_info(col: Column) -> Column:
-    """Struct column ``(format, sampling_rate, duration, est)`` sniffed
-    from any supported audio container."""
-    return audio_info(col)

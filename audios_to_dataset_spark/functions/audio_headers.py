@@ -9,8 +9,8 @@ and duration all live in headers).
 Public specs: ISO/IEC 11172-3 (MPEG-1 audio framing), id3.org (ID3v2
 syncsafe sizes), xiph.org FLAC format (METADATA_BLOCK_STREAMINFO), and
 RFC 7845 (Ogg encapsulation for Opus). All parsing is pure
-struct/integer arithmetic; malformed input -> the (None, 0, 0, 0)
-fallback shared with parse_wav_header.
+struct/integer arithmetic; malformed input -> (None, 0, 0, 0), the
+same keep-with-zeros contract as ``wav.parse_wav_header``'s (0.0, 0).
 """
 
 from __future__ import annotations

@@ -1,22 +1,26 @@
-"""WAV header decoding (P4) as an Arrow-batched pandas UDF.
+"""RIFF/WAVE reading and writing (P4) and the WAV-level signal functions
+built on them.
 
-Reference semantics (/root/reference/src/main.rs:760-769, via the hound
+Reference semantics (the reference's src/main.rs:760-769, via the hound
 crate): parse the in-memory WAV; ``duration = samples_per_channel /
 sample_rate`` (f64 seconds), ``sampling_rate`` i32; ANY parse failure →
 ``(0.0, 0)`` so non-WAV files are kept with zero duration (README.md:94).
 
-This is one of the two genuinely non-relational computations in the
-engine (the other is MIME sniffing, which magic-bytes expressions cover),
-so it is the one place a pandas UDF is justified: pure-Python RIFF chunk
-walk over Arrow-delivered bytes, no JVM audio codec needed.
+``read_wav`` is the only RIFF chunk walk: it returns a ``WavLayout``
+(the fmt fields, the fmt chunk body and where the data chunk lies) or
+None. Each reader below takes its layout from it and adds only its own
+validity rule. ``wav_bytes`` is the only RIFF writer: the segmenter and
+every ``synth_wav*`` fixture build their files through it. The pandas
+UDFs (``wav_info``, ``wav_stats``, ``with_audio_fingerprint``) are thin
+Arrow-batched maps of these byte-level functions.
 """
 
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -28,37 +32,91 @@ WAV_RESULT_TYPE = T.StructType(
 )
 
 
+class WavLayout(NamedTuple):
+    """A RIFF/WAVE file's fmt fields, its whole fmt chunk body (extension
+    bytes included) and the data chunk's payload as offset + length into
+    the original bytes."""
+
+    tag: int
+    channels: int
+    sample_rate: int
+    byte_rate: int
+    block_align: int
+    bits: int
+    fmt: bytes
+    data_off: int
+    data_len: int
+
+
+def read_wav(data: bytes | None) -> WavLayout | None:
+    """Walk the RIFF/WAVE chunks; None unless the file is ``RIFF…WAVE``
+    with a fmt and a data chunk. A fmt chunk counts only when it is at
+    least 16 bytes and its first 16 lie inside the file; the last fmt and
+    the last data chunk win; odd chunk sizes are padded by one byte
+    (chunks are word-aligned); the data size is clamped to end-of-file.
+    The payload is never copied."""
+    if data is None or len(data) < 12:
+        return None
+    if data[0:4] != b"RIFF" or data[8:12] != b"WAVE":
+        return None
+    n = len(data)
+    pos = 12
+    fmt = None
+    data_off = data_len = -1
+    while pos + 8 <= n:
+        chunk_id = data[pos : pos + 4]
+        (size,) = struct.unpack_from("<I", data, pos + 4)
+        body = pos + 8
+        if chunk_id == b"fmt " and size >= 16 and body + 16 <= n:
+            fmt = data[body : body + size]
+        elif chunk_id == b"data":
+            data_off, data_len = body, min(size, n - body)
+        pos = body + size + (size & 1)
+    if fmt is None or data_off < 0:
+        return None
+    return WavLayout(
+        *struct.unpack_from("<HHIIHH", fmt), fmt, data_off, data_len
+    )
+
+
+def pcm_fmt(tag: int, channels: int, rate: int, bits: int) -> bytes:
+    """The 16-byte fmt chunk body of an interleaved format whose frame is
+    ``channels * bits / 8`` bytes."""
+    align = channels * bits // 8
+    return struct.pack(
+        "<HHIIHH", tag, channels, rate, rate * align, align, bits
+    )
+
+
+def wav_bytes(fmt_body: bytes, body: bytes) -> bytes:
+    """A RIFF/WAVE file of one fmt chunk, padded to even length, and one
+    data chunk. An odd-length data chunk gets no pad byte; it is the
+    last chunk, so every reader still finds the whole payload."""
+    pad = b"\x00" * (len(fmt_body) & 1)
+    return b"".join(
+        (
+            b"RIFF",
+            struct.pack("<I", 20 + len(fmt_body) + len(pad) + len(body)),
+            b"WAVE",
+            b"fmt ",
+            struct.pack("<I", len(fmt_body)),
+            fmt_body,
+            pad,
+            b"data",
+            struct.pack("<I", len(body)),
+            body,
+        )
+    )
+
+
 def parse_wav_header(data: bytes | None) -> tuple[float, int]:
-    """Parse RIFF/WAVE: find fmt (sample rate, block align) and data
-    (payload size); duration = data_size / block_align / sample_rate.
-    Any structural problem → (0.0, 0)."""
-    try:
-        if data is None or len(data) < 12:
-            return 0.0, 0
-        if data[0:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return 0.0, 0
-        pos = 12
-        sample_rate = 0
-        block_align = 0
-        data_size = -1
-        n = len(data)
-        while pos + 8 <= n:
-            chunk_id = data[pos : pos + 4]
-            (chunk_size,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if chunk_id == b"fmt " and chunk_size >= 16 and body + 16 <= n:
-                (_fmt_tag, _channels, sample_rate, _byte_rate, block_align,
-                 _bits) = struct.unpack_from("<HHIIHH", data, body)
-            elif chunk_id == b"data":
-                data_size = min(chunk_size, n - body)
-            # chunks are word-aligned: odd sizes are padded by one byte
-            pos = body + chunk_size + (chunk_size & 1)
-        if sample_rate <= 0 or block_align <= 0 or data_size < 0:
-            return 0.0, 0
-        samples_per_channel = data_size // block_align
-        return samples_per_channel / sample_rate, int(sample_rate)
-    except Exception:
+    """(duration, sampling_rate) with duration = data_size / block_align
+    / sample_rate; anything ``read_wav`` rejects, or a zero rate or
+    block align → (0.0, 0)."""
+    w = read_wav(data)
+    if w is None or w.sample_rate <= 0 or w.block_align <= 0:
         return 0.0, 0
+    return (w.data_len // w.block_align) / w.sample_rate, w.sample_rate
 
 
 @pandas_udf(WAV_RESULT_TYPE)
@@ -70,12 +128,6 @@ def wav_info(content: pd.Series) -> pd.DataFrame:
             "sampling_rate": [s for _, s in out],
         }
     )
-
-
-def with_wav_info(col: Column) -> Column:
-    """Struct column ``(duration double, sampling_rate int)`` decoded from
-    WAV bytes."""
-    return wav_info(col)
 
 
 WAV_STATS_TYPE = T.StructType(
@@ -221,83 +273,58 @@ def wav_pcm_stats(data: bytes | None) -> tuple[float, float, float, int]:
     """
     import numpy as np
 
-    try:
-        if data is None or len(data) < 12:
-            return 0.0, 0.0, 0.0, 0
-        if data[0:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return 0.0, 0.0, 0.0, 0
-        pos = 12
-        tag = 0
-        bits = 0
-        balign = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            chunk_id = data[pos : pos + 4]
-            (chunk_size,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if chunk_id == b"fmt " and chunk_size >= 16 and body + 16 <= n:
-                (tag, _ch, _sr, _br, balign, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-                if tag == 0xFFFE and chunk_size >= 40 and body + 40 <= n:
-                    # WAVE_FORMAT_EXTENSIBLE (Microsoft multichannel
-                    # spec): the real format lives in the SubFormat
-                    # GUID's Data1; the rest must be the fixed
-                    # KSDATAFORMAT suffix or the stream is rejected.
-                    guid = data[body + 24 : body + 40]
-                    if guid[2:] == _KSDATAFORMAT_SUFFIX:
-                        (tag,) = struct.unpack_from("<H", guid, 0)
-                    else:
-                        tag = 0
-            elif chunk_id == b"data":
-                body_off = body
-                body_len = min(chunk_size, n - body)
-            pos = body + chunk_size + (chunk_size & 1)
-        if body_off < 0 or body_len < 1:
-            return 0.0, 0.0, 0.0, 0
-        if tag == 1 and bits == 16 and body_len >= 2:
-            ints = np.frombuffer(
-                data, dtype="<i2", count=body_len // 2, offset=body_off
-            ).astype(np.float64)
-        elif tag == 1 and bits == 8:
-            # unsigned 8-bit PCM: midpoint 128, widened to 16-bit range
-            codes = np.frombuffer(
-                data, dtype=np.uint8, count=body_len, offset=body_off
-            )
-            ints = (codes.astype(np.float64) - 128.0) * 256.0
-        elif tag == 7 and bits == 8:
-            codes = np.frombuffer(
-                data, dtype=np.uint8, count=body_len, offset=body_off
-            )
-            ints = _mulaw_table()[codes].astype(np.float64)
-        elif tag == 6 and bits == 8:
-            codes = np.frombuffer(
-                data, dtype=np.uint8, count=body_len, offset=body_off
-            )
-            ints = _alaw_table()[codes].astype(np.float64)
-        elif tag == 0x11 and bits == 4:
-            # IMA/DVI ADPCM (mono): sequential nibble state machine
-            decoded = _ima_decode(data, body_off, body_len, balign)
-            if not decoded:
-                return 0.0, 0.0, 0.0, 0
-            ints = np.array(decoded, dtype=np.float64)
-        elif tag == 3 and bits == 32 and body_len >= 4:
-            # IEEE float samples are already normalized; scale up so the
-            # shared /32768 below is a no-op (exact power-of-two scaling)
-            ints = np.frombuffer(
-                data, dtype="<f4", count=body_len // 4, offset=body_off
-            ).astype(np.float64) * 32768.0
-        else:
-            return 0.0, 0.0, 0.0, 0
-        pcm = ints / 32768.0
-        rms = float(np.sqrt(np.mean(pcm * pcm)))
-        peak = float(np.max(np.abs(pcm)))
-        clipped = float(np.mean(np.abs(pcm) >= 32767.0 / 32768.0))
-        return rms, peak, clipped, int(pcm.size)
-    except Exception:
+    w = read_wav(data)
+    if w is None or w.data_len < 1:
         return 0.0, 0.0, 0.0, 0
+    tag, bits, body_off, body_len = w.tag, w.bits, w.data_off, w.data_len
+    if tag == 0xFFFE and len(w.fmt) >= 40:
+        # WAVE_FORMAT_EXTENSIBLE (Microsoft multichannel spec): the real
+        # format lives in the SubFormat GUID's Data1; the rest must be
+        # the fixed KSDATAFORMAT suffix or the stream is rejected.
+        guid = w.fmt[24:40]
+        if guid[2:] == _KSDATAFORMAT_SUFFIX:
+            (tag,) = struct.unpack_from("<H", guid, 0)
+        else:
+            tag = 0
+    if tag == 1 and bits == 16 and body_len >= 2:
+        ints = np.frombuffer(
+            data, dtype="<i2", count=body_len // 2, offset=body_off
+        ).astype(np.float64)
+    elif tag == 1 and bits == 8:
+        # unsigned 8-bit PCM: midpoint 128, widened to 16-bit range
+        codes = np.frombuffer(
+            data, dtype=np.uint8, count=body_len, offset=body_off
+        )
+        ints = (codes.astype(np.float64) - 128.0) * 256.0
+    elif tag == 7 and bits == 8:
+        codes = np.frombuffer(
+            data, dtype=np.uint8, count=body_len, offset=body_off
+        )
+        ints = _mulaw_table()[codes].astype(np.float64)
+    elif tag == 6 and bits == 8:
+        codes = np.frombuffer(
+            data, dtype=np.uint8, count=body_len, offset=body_off
+        )
+        ints = _alaw_table()[codes].astype(np.float64)
+    elif tag == 0x11 and bits == 4:
+        # IMA/DVI ADPCM (mono): sequential nibble state machine
+        decoded = _ima_decode(data, body_off, body_len, w.block_align)
+        if not decoded:
+            return 0.0, 0.0, 0.0, 0
+        ints = np.array(decoded, dtype=np.float64)
+    elif tag == 3 and bits == 32 and body_len >= 4:
+        # IEEE float samples are already normalized; scale up so the
+        # shared /32768 below is a no-op (exact power-of-two scaling)
+        ints = np.frombuffer(
+            data, dtype="<f4", count=body_len // 4, offset=body_off
+        ).astype(np.float64) * 32768.0
+    else:
+        return 0.0, 0.0, 0.0, 0
+    pcm = ints / 32768.0
+    rms = float(np.sqrt(np.mean(pcm * pcm)))
+    peak = float(np.max(np.abs(pcm)))
+    clipped = float(np.mean(np.abs(pcm) >= 32767.0 / 32768.0))
+    return rms, peak, clipped, int(pcm.size)
 
 
 @pandas_udf(WAV_STATS_TYPE)
@@ -315,11 +342,17 @@ def wav_stats(content: pd.Series) -> pd.DataFrame:
     )
 
 
-def with_wav_stats(col: Column) -> Column:
-    """Struct column ``(rms, peak, clipped_frac, n_samples)`` from WAV
-    bytes — Arrow-batched; the only Python work is the header walk, the
-    math is numpy-vectorized."""
-    return wav_stats(col)
+def _md5_int(key: str, hex_digits: int) -> int:
+    """The first ``hex_digits`` hex digits of md5(key) as an int — the
+    sample formula the fixtures below share with their SQL oracles."""
+    import hashlib
+
+    return int(hashlib.md5(key.encode()).hexdigest()[:hex_digits], 16)
+
+
+def _pcm16(samples: list[int]) -> bytes:
+    """Little-endian int16 payload of ``samples``."""
+    return struct.pack(f"<{len(samples)}h", *samples)
 
 
 def synth_wav(
@@ -335,20 +368,14 @@ def synth_wav(
 
     if n_samples is None:
         n_samples = sample_rate
-    body = bytearray()
-    for i in range(n_samples):
-        v = int(32767.0 * math.sin(2.0 * math.pi * freq_hz * i / sample_rate))
-        frame = struct.pack("<h", v) * channels
-        body += frame
-    block_align = 2 * channels
-    byte_rate = sample_rate * block_align
-    data_size = len(body)
-    hdr = b"RIFF" + struct.pack("<I", 36 + data_size) + b"WAVE"
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 1, channels, sample_rate, byte_rate, block_align, 16
+    body = _pcm16(
+        [
+            int(32767.0 * math.sin(2.0 * math.pi * freq_hz * i / sample_rate))
+            for i in range(n_samples)
+            for _ in range(channels)
+        ]
     )
-    data = b"data" + struct.pack("<I", data_size)
-    return bytes(hdr + fmt + data + body)
+    return wav_bytes(pcm_fmt(1, channels, sample_rate, 16), body)
 
 
 def segment_wav_bytes(
@@ -361,106 +388,27 @@ def segment_wav_bytes(
     data chunk sliced on frame boundaries) so downstream consumers can
     treat segments exactly like source files. Unparseable input → []
     (the skip-with-warning analog of the reference's decode-failure
-    tolerance, /root/reference/src/main.rs:768).
+    tolerance, src/main.rs:768).
     """
-    try:
-        if data is None or len(data) < 12 or data[0:4] != b"RIFF" \
-                or data[8:12] != b"WAVE":
-            return []
-        pos = 12
-        n = len(data)
-        fmt_body = None
-        sample_rate = 0
-        block_align = 0
-        data_off = -1
-        data_size = -1
-        while pos + 8 <= n:
-            chunk_id = data[pos : pos + 4]
-            (chunk_size,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if chunk_id == b"fmt " and chunk_size >= 16 and body + 16 <= n:
-                fmt_body = data[body : body + chunk_size]
-                (_t, _c, sample_rate, _br, block_align, _b) = (
-                    struct.unpack_from("<HHIIHH", data, body)
-                )
-            elif chunk_id == b"data":
-                data_off = body
-                data_size = min(chunk_size, n - body)
-            pos = body + chunk_size + (chunk_size & 1)
-        if (
-            fmt_body is None
-            or sample_rate <= 0
-            or block_align <= 0
-            or data_off < 0
-            or data_size < 0
-        ):
-            return []
-        frames = data_size // block_align
-        frames_per_seg = max(int(seg_seconds * sample_rate), 1)
-        out = []
-        for idx, start in enumerate(range(0, frames, frames_per_seg)):
-            seg_frames = min(frames_per_seg, frames - start)
-            lo = data_off + start * block_align
-            seg_body = data[lo : lo + seg_frames * block_align]
-            fmt = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-            if len(fmt_body) & 1:
-                fmt += b"\x00"
-            dchunk = b"data" + struct.pack("<I", len(seg_body)) + seg_body
-            riff = (
-                b"RIFF"
-                + struct.pack("<I", 4 + len(fmt) + len(dchunk))
-                + b"WAVE"
-                + fmt
-                + dchunk
-            )
-            out.append(
-                (
-                    idx,
-                    start / sample_rate,
-                    seg_frames / sample_rate,
-                    riff,
-                )
-            )
-        return out
-    except Exception:
+    w = read_wav(data)
+    if w is None or w.sample_rate <= 0 or w.block_align <= 0:
         return []
-
-
-SEGMENT_SCHEMA = (
-    "path string, seg_idx int, seg_start double,"
-    " seg_duration double, seg_bytes binary"
-)
-
-
-def segment_wavs(
-    df, content_col: str = "content", path_col: str = "path",
-    seg_seconds: float = 0.25,
-):
-    """Explode whole-file WAV rows into fixed-duration segment rows via
-    mapInPandas — the audio-chunking pass a training pipeline runs to
-    normalize clip lengths. Arrow-batched; each input batch yields one
-    output frame, so memory is bounded by batch size × segment count,
-    and the operator parallelizes per input partition with no shuffle.
-    """
-    import pandas as pd  # noqa: F811 — local for the worker closure
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for p, b in zip(pdf[path_col], pdf[content_col]):
-                for idx, st, dur, sb in segment_wav_bytes(b, seg_seconds):
-                    rows.append((p, idx, st, dur, sb))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "seg_idx", "seg_start", "seg_duration",
-                    "seg_bytes",
-                ],
+    frames = w.data_len // w.block_align
+    frames_per_seg = max(int(seg_seconds * w.sample_rate), 1)
+    out = []
+    for idx, start in enumerate(range(0, frames, frames_per_seg)):
+        seg_frames = min(frames_per_seg, frames - start)
+        lo = w.data_off + start * w.block_align
+        seg_body = data[lo : lo + seg_frames * w.block_align]
+        out.append(
+            (
+                idx,
+                start / w.sample_rate,
+                seg_frames / w.sample_rate,
+                wav_bytes(w.fmt, seg_body),
             )
-
-    return df.select(path_col, content_col).mapInPandas(
-        gen, SEGMENT_SCHEMA
-    )
+        )
+    return out
 
 
 def synth_wav_md5(doc_id: int) -> bytes:
@@ -470,24 +418,10 @@ def synth_wav_md5(doc_id: int) -> bytes:
     8000/12000/16000 by id. Feeds q_audio_stats: the real RIFF parse +
     numpy PCM stats must reproduce values a SQL oracle derives from the
     same formula, so header-walk or scaling bugs fail the value hash."""
-    import hashlib
-
     n = 64 + doc_id % 37
     sr = 8000 + (doc_id % 3) * 4000
-    body = b"".join(
-        struct.pack(
-            "<h",
-            int(
-                hashlib.md5(f"au:{doc_id}:{i}".encode()).hexdigest()[:4], 16
-            )
-            - 32768,
-        )
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = _pcm16([_md5_int(f"au:{doc_id}:{i}", 4) - 32768 for i in range(n)])
+    return wav_bytes(pcm_fmt(1, 1, sr, 16), body)
 
 
 def synth_wav_md5_alaw(doc_id: int) -> bytes:
@@ -495,18 +429,9 @@ def synth_wav_md5_alaw(doc_id: int) -> bytes:
     block_align 1): code i = first md5 byte of ``al:{id}:{i}``,
     n = 40 + id % 23 samples at 8 kHz. Drives the G.711 A-law expansion
     through q_audio_alaw's value-hash oracle."""
-    import hashlib
-
     n = 40 + doc_id % 23
-    sr = 8000
-    body = bytes(
-        int(hashlib.md5(f"al:{doc_id}:{i}".encode()).hexdigest()[:2], 16)
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 6, 1, sr, sr, 1, 8)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = bytes(_md5_int(f"al:{doc_id}:{i}", 2) for i in range(n))
+    return wav_bytes(pcm_fmt(6, 1, 8000, 8), body)
 
 
 def synth_wav_md5_pcm8(doc_id: int) -> bytes:
@@ -514,18 +439,9 @@ def synth_wav_md5_pcm8(doc_id: int) -> bytes:
     sample i = first md5 byte of ``p8:{id}:{i}``, n = 56 + id % 31 at
     11025 Hz. The decoder must recentre on 128 and widen <<8; the
     oracle replays (v - 128) * 256 / 32768 exactly."""
-    import hashlib
-
     n = 56 + doc_id % 31
-    sr = 11025
-    body = bytes(
-        int(hashlib.md5(f"p8:{doc_id}:{i}".encode()).hexdigest()[:2], 16)
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr, 1, 8)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = bytes(_md5_int(f"p8:{doc_id}:{i}", 2) for i in range(n))
+    return wav_bytes(pcm_fmt(1, 1, 11025, 8), body)
 
 
 def synth_wav_md5_f32(doc_id: int) -> bytes:
@@ -534,28 +450,11 @@ def synth_wav_md5_f32(doc_id: int) -> bytes:
     16-bit dyadic rational, so the float32 write and float64 read are
     both EXACT and the SQL oracle needs no float32 rounding model.
     n = 32 + id % 19 samples at 16 kHz."""
-    import hashlib
-
     n = 32 + doc_id % 19
-    sr = 16000
-    body = b"".join(
-        struct.pack(
-            "<f",
-            (
-                int(
-                    hashlib.md5(f"f3:{doc_id}:{i}".encode()).hexdigest()[:4],
-                    16,
-                )
-                - 32768
-            )
-            / 32768.0,
-        )
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 3, 1, sr, sr * 4, 4, 32)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    vals = [
+        (_md5_int(f"f3:{doc_id}:{i}", 4) - 32768) / 32768.0 for i in range(n)
+    ]
+    return wav_bytes(pcm_fmt(3, 1, 16000, 32), struct.pack(f"<{n}f", *vals))
 
 
 def synth_wav_md5_ext(doc_id: int) -> bytes:
@@ -567,31 +466,21 @@ def synth_wav_md5_ext(doc_id: int) -> bytes:
     dyadic v/32768 storage makes both subformats EXACTLY the same
     signal, so ONE oracle formula covers the whole family and any
     GUID-dispatch bug shows up as a zeroed row."""
-    import hashlib
-
     n = 44 + doc_id % 31
     sr = 8000 + (doc_id % 3) * 4000
-    is_f32 = doc_id % 2 == 1
-    vals = [
-        int(hashlib.md5(f"wx:{doc_id}:{i}".encode()).hexdigest()[:4], 16)
-        - 32768
-        for i in range(n)
-    ]
-    if is_f32:
-        body = b"".join(struct.pack("<f", v / 32768.0) for v in vals)
-        sub, bits, width = 3, 32, 4
+    vals = [_md5_int(f"wx:{doc_id}:{i}", 4) - 32768 for i in range(n)]
+    if doc_id % 2 == 1:
+        body = struct.pack(f"<{n}f", *(v / 32768.0 for v in vals))
+        sub, bits = 3, 32
     else:
-        body = b"".join(struct.pack("<h", v) for v in vals)
-        sub, bits, width = 1, 16, 2
-    guid = struct.pack("<H", sub) + _KSDATAFORMAT_SUFFIX
-    fmt_body = struct.pack(
-        "<HHIIHH", 0xFFFE, 1, sr, sr * width, width, bits
-    ) + struct.pack("<HHI", 22, bits, 0x4) + guid
-    hdr = b"RIFF" + struct.pack("<I", 20 + len(fmt_body) + len(body)) \
-        + b"WAVE"
-    fmt = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+        body = _pcm16(vals)
+        sub, bits = 1, 16
+    fmt_body = (
+        pcm_fmt(0xFFFE, 1, sr, bits)
+        + struct.pack("<HHIH", 22, bits, 0x4, sub)
+        + _KSDATAFORMAT_SUFFIX
+    )
+    return wav_bytes(fmt_body, body)
 
 
 def resample_linear(
@@ -631,36 +520,15 @@ def downmix_stereo(data: bytes | None) -> tuple[list[float], int]:
     stereo/malformed input → ([], 0)."""
     import numpy as np
 
-    try:
-        if data is None or len(data) < 44 or data[:4] != b"RIFF":
-            return [], 0
-        pos = 12
-        tag = ch = sr = bits = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            cid = data[pos : pos + 4]
-            (csz,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if cid == b"fmt " and csz >= 16 and body + 16 <= n:
-                (tag, ch, sr, _br, _ba, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-            elif cid == b"data":
-                body_off = body
-                body_len = min(csz, n - body)
-            pos = body + csz + (csz & 1)
-        if tag != 1 or ch != 2 or bits != 16 or body_off < 0:
-            return [], 0
-        x = np.frombuffer(
-            data, dtype="<i2", count=(body_len // 4) * 2, offset=body_off
-        ).astype(np.float64)
-        frames = x.reshape(-1, 2)
-        mono = (frames[:, 0] + frames[:, 1]) * 0.5 / 32768.0
-        return mono.tolist(), int(sr)
-    except Exception:
+    w = read_wav(data)
+    if w is None or w.tag != 1 or w.channels != 2 or w.bits != 16:
         return [], 0
+    x = np.frombuffer(
+        data, dtype="<i2", count=(w.data_len // 4) * 2, offset=w.data_off
+    ).astype(np.float64)
+    frames = x.reshape(-1, 2)
+    mono = (frames[:, 0] + frames[:, 1]) * 0.5 / 32768.0
+    return mono.tolist(), w.sample_rate
 
 
 def synth_wav_dropout(doc_id: int) -> bytes:
@@ -670,25 +538,15 @@ def synth_wav_dropout(doc_id: int) -> bytes:
     ADC/link produces), else the centered md5 value of ``dr:{id}:{i}``.
     n = 200 + id % 41 samples at 16 kHz. Feeds q_audio_dropout; the
     SQL oracle replays the same CASE + md5 formula."""
-    import hashlib
-
     n = 200 + doc_id % 41
-    sr = 16000
-
-    def s(i: int) -> int:
-        if (i // 16) % 7 == doc_id % 7:
-            return 0
-        return (
-            int(hashlib.md5(f"dr:{doc_id}:{i}".encode()).hexdigest()[:4],
-                16)
-            - 32768
-        )
-
-    body = b"".join(struct.pack("<h", s(i)) for i in range(n))
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = _pcm16(
+        [
+            0 if (i // 16) % 7 == doc_id % 7
+            else _md5_int(f"dr:{doc_id}:{i}", 4) - 32768
+            for i in range(n)
+        ]
+    )
+    return wav_bytes(pcm_fmt(1, 1, 16000, 16), body)
 
 
 def synth_wav_md5_stereo(doc_id: int) -> bytes:
@@ -696,25 +554,15 @@ def synth_wav_md5_stereo(doc_id: int) -> bytes:
     sample = md5(``sl:{id}:{i}``) two bytes - 32768, right =
     md5(``sr:{id}:{i}``) likewise; n = 40 + id % 21 frames at 16 kHz,
     interleaved L/R per the RIFF spec."""
-    import hashlib
-
     n = 40 + doc_id % 21
-    sr = 16000
-
-    def s(tag: str, i: int) -> int:
-        return (
-            int(hashlib.md5(f"{tag}:{doc_id}:{i}".encode()).hexdigest()[:4],
-                16)
-            - 32768
-        )
-
-    body = b"".join(
-        struct.pack("<hh", s("sl", i), s("sr", i)) for i in range(n)
+    body = _pcm16(
+        [
+            _md5_int(f"{side}:{doc_id}:{i}", 4) - 32768
+            for i in range(n)
+            for side in ("sl", "sr")
+        ]
     )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 2, sr, sr * 4, 4, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    return wav_bytes(pcm_fmt(1, 2, 16000, 16), body)
 
 
 def synth_wav_md5_adpcm(doc_id: int) -> bytes:
@@ -724,28 +572,21 @@ def synth_wav_md5_adpcm(doc_id: int) -> bytes:
     of md5(``ad:{id}:{k}``); n_nibbles = 24 + 2*(id % 11) (even, so no
     padding nibble). The SQL oracle replays the decode recurrence as a
     recursive CTE against the same md5 formulas."""
-    import hashlib
-
     n_nib = 24 + 2 * (doc_id % 11)
     sr = 8000
-    pred0 = int(hashlib.md5(f"ap:{doc_id}".encode()).hexdigest()[:4], 16) - 32768
-    idx0 = int(hashlib.md5(f"ai:{doc_id}".encode()).hexdigest()[:2], 16) % 89
-    nibbles = [
-        int(hashlib.md5(f"ad:{doc_id}:{k}".encode()).hexdigest()[0], 16)
-        for k in range(n_nib)
-    ]
+    pred0 = _md5_int(f"ap:{doc_id}", 4) - 32768
+    idx0 = _md5_int(f"ai:{doc_id}", 2) % 89
+    nibbles = [_md5_int(f"ad:{doc_id}:{k}", 1) for k in range(n_nib)]
     payload = bytearray(struct.pack("<hBB", pred0, idx0, 0))
     for j in range(0, n_nib, 2):
         payload.append(nibbles[j] | (nibbles[j + 1] << 4))
     block_align = len(payload)
     spb = 1 + n_nib
-    hdr = b"RIFF" + struct.pack("<I", 40 + len(payload)) + b"WAVE"
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHHHH", 20, 0x11, 1, sr,
+    fmt_body = struct.pack(
+        "<HHIIHHHH", 0x11, 1, sr,
         sr * block_align // spb, block_align, 4, 2, spb,
     )
-    data = b"data" + struct.pack("<I", len(payload))
-    return hdr + fmt + data + bytes(payload)
+    return wav_bytes(fmt_body, bytes(payload))
 
 
 def synth_wav_md5_ulaw(doc_id: int) -> bytes:
@@ -753,18 +594,9 @@ def synth_wav_md5_ulaw(doc_id: int) -> bytes:
     block_align 1): code i = first md5 byte of ``ul:{id}:{i}``,
     n = 48 + id % 29 samples at 8 kHz. Drives the G.711 expansion
     through q_audio_ulaw's value-hash oracle."""
-    import hashlib
-
     n = 48 + doc_id % 29
-    sr = 8000
-    body = bytes(
-        int(hashlib.md5(f"ul:{doc_id}:{i}".encode()).hexdigest()[:2], 16)
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 7, 1, sr, sr, 1, 8)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = bytes(_md5_int(f"ul:{doc_id}:{i}", 2) for i in range(n))
+    return wav_bytes(pcm_fmt(7, 1, 8000, 8), body)
 
 
 # ---------------------------------------------------------------------------
@@ -786,10 +618,7 @@ AFP_SAMPLES = AFP_WIN * AFP_WINDOWS
 
 def _afp_sample(key: str) -> int:
     """First 4 md5 hex digits % 40000 - 20000 (int16-safe)."""
-    import hashlib
-
-    return int(hashlib.md5(key.encode()).hexdigest()[:4], 16) % 40000 \
-        - 20000
+    return _md5_int(key, 4) % 40000 - 20000
 
 
 def synth_wav_group(doc_id: int) -> bytes:
@@ -800,22 +629,16 @@ def synth_wav_group(doc_id: int) -> bytes:
     md5('afp:{doc_id}:{i}') — both formulas a DuckDB oracle replays."""
     g = doc_id % AFP_GROUPS
     pwin = (doc_id // AFP_GROUPS) % AFP_WINDOWS
-    body = b"".join(
-        struct.pack(
-            "<h",
+    body = _pcm16(
+        [
             _afp_sample(
                 f"afp:{doc_id}:{i}" if i // AFP_WIN == pwin
                 else f"af:{g}:{i}"
-            ),
-        )
-        for i in range(AFP_SAMPLES)
+            )
+            for i in range(AFP_SAMPLES)
+        ]
     )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 1, 1, 16000, 32000, 2, 16
-    )
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    return wav_bytes(pcm_fmt(1, 1, 16000, 16), body)
 
 
 def wav_pcm16_samples(data: bytes | None):
@@ -824,34 +647,12 @@ def wav_pcm16_samples(data: bytes | None):
     input -> None (keep-with-fallback)."""
     import numpy as np
 
-    try:
-        if data is None or len(data) < 12 or data[0:4] != b"RIFF" \
-                or data[8:12] != b"WAVE":
-            return None
-        pos = 12
-        tag = bits = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            cid = data[pos : pos + 4]
-            (csize,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if cid == b"fmt " and csize >= 16 and body + 16 <= n:
-                (tag, _ch, _sr, _br, _ba, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-            elif cid == b"data":
-                body_off = body
-                body_len = min(csize, n - body)
-            pos = body + csize + (csize & 1)
-        if tag != 1 or bits != 16 or body_off < 0 or body_len < 2:
-            return None
-        return np.frombuffer(
-            data, dtype="<i2", count=body_len // 2, offset=body_off
-        )
-    except Exception:
+    w = read_wav(data)
+    if w is None or w.tag != 1 or w.bits != 16 or w.data_len < 2:
         return None
+    return np.frombuffer(
+        data, dtype="<i2", count=w.data_len // 2, offset=w.data_off
+    )
 
 
 def wav_pcm16_frames(data: bytes | None):
@@ -863,39 +664,17 @@ def wav_pcm16_frames(data: bytes | None):
     fill a whole inter-channel frame are dropped."""
     import numpy as np
 
-    try:
-        if data is None or len(data) < 12 or data[0:4] != b"RIFF" \
-                or data[8:12] != b"WAVE":
-            return None
-        pos = 12
-        tag = bits = ch = sr = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            cid = data[pos : pos + 4]
-            (csize,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if cid == b"fmt " and csize >= 16 and body + 16 <= n:
-                (tag, ch, sr, _br, _ba, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-            elif cid == b"data":
-                body_off = body
-                body_len = min(csize, n - body)
-            pos = body + csize + (csize & 1)
-        if tag != 1 or bits != 16 or body_off < 0 or body_len < 2 \
-                or not 1 <= ch <= 8 or sr <= 0:
-            return None
-        frames = body_len // (2 * ch)
-        if frames == 0:
-            return None
-        s = np.frombuffer(
-            data, dtype="<i2", count=frames * ch, offset=body_off
-        )
-        return s, sr, ch
-    except Exception:
+    w = read_wav(data)
+    if w is None or w.tag != 1 or w.bits != 16 \
+            or not 1 <= w.channels <= 8 or w.sample_rate <= 0:
         return None
+    frames = w.data_len // (2 * w.channels)
+    if frames == 0:
+        return None
+    s = np.frombuffer(
+        data, dtype="<i2", count=frames * w.channels, offset=w.data_off
+    )
+    return s, w.sample_rate, w.channels
 
 
 def audio_fingerprint(data: bytes | None) -> tuple[int, int] | None:
@@ -952,32 +731,16 @@ def synth_wav_vad(doc_id: int) -> bytes:
     safely above any sane threshold); silent frames are all zeros.
     The voiced/silent pattern — and therefore every VAD statistic —
     has a closed-form SQL oracle."""
-    import hashlib
-
     n_frames = 6 + doc_id % 5
     samples = []
     for b in range(n_frames):
-        hb = int(
-            hashlib.md5(f"vd:{doc_id}:{b}".encode()).hexdigest()[:2], 16
-        )
-        if hb >= 128:
+        if _md5_int(f"vd:{doc_id}:{b}", 2) >= 128:
             for i in range(40):
-                h16 = int(
-                    hashlib.md5(
-                        f"vd:{doc_id}:{b}:{i}".encode()
-                    ).hexdigest()[:4],
-                    16,
-                )
-                mag = 8192 + h16 % 8192
+                mag = 8192 + _md5_int(f"vd:{doc_id}:{b}:{i}", 4) % 8192
                 samples.append(mag if i % 2 == 0 else -mag)
         else:
             samples.extend([0] * 40)
-    body = b"".join(struct.pack("<h", s) for s in samples)
-    sr = 8000
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    return wav_bytes(pcm_fmt(1, 1, 8000, 16), _pcm16(samples))
 
 
 def vad_segments(

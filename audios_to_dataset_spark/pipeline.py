@@ -201,9 +201,12 @@ def _transcode_wav_to_flac(df):
     ``.wav``/``.wave`` suffix, appended otherwise) so extension-based
     reader dispatch always sees the real payload format. Channel
     count is carried through (interleaved samples + the fmt chunk's
-    channel count into FLAC independent-channel subframes), so stereo
-    and multichannel WAVs round-trip bit-exactly. One Arrow-batched
-    map stage — no shuffle."""
+    channel count into FLAC independent-channel subframes), so plain
+    PCM16 WAVs (format tag 1) of 1-8 channels round-trip bit-exactly.
+    WAVE_FORMAT_EXTENSIBLE files (tag 0xFFFE, the layout most
+    >2-channel WAVs use) are not decoded: they pass through
+    untranscoded and keep their ``.wav`` path. One Arrow-batched map
+    stage — no shuffle."""
     import re as _re
 
     import pandas as pd

@@ -1092,7 +1092,7 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sums stay under 53 bits — see test_audio_stats_oracle_parity.)"""
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.wav import synth_wav_md5, with_wav_info, with_wav_stats
+    from ..functions.wav import synth_wav_md5, wav_info, wav_stats
 
     d = _doc_ids(spark, sf_dir)
 
@@ -1105,8 +1105,8 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     wav = d.withColumn("content", _synth(F.col("doc_id")))
     out = wav.select(
         "doc_id",
-        with_wav_info(F.col("content")).alias("info"),
-        with_wav_stats(F.col("content")).alias("stats"),
+        wav_info(F.col("content")).alias("info"),
+        wav_stats(F.col("content")).alias("stats"),
     )
     return out.select(
         "doc_id",
@@ -1153,11 +1153,7 @@ def q_audio_ulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash."""
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.wav import (
-        synth_wav_md5_ulaw,
-        with_wav_info,
-        with_wav_stats,
-    )
+    from ..functions.wav import synth_wav_md5_ulaw, wav_info, wav_stats
 
     d = _doc_ids(spark, sf_dir)
 
@@ -1170,8 +1166,8 @@ def q_audio_ulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     wav = d.withColumn("content", _synth(F.col("doc_id")))
     out = wav.select(
         "doc_id",
-        with_wav_info(F.col("content")).alias("info"),
-        with_wav_stats(F.col("content")).alias("stats"),
+        wav_info(F.col("content")).alias("info"),
+        wav_stats(F.col("content")).alias("stats"),
     )
     return out.select(
         "doc_id",
@@ -1206,8 +1202,8 @@ def _audio_stats_query(synth_name: str):
         wav = d.withColumn("content", _synth(F.col("doc_id")))
         out = wav.select(
             "doc_id",
-            W.with_wav_info(F.col("content")).alias("info"),
-            W.with_wav_stats(F.col("content")).alias("stats"),
+            W.wav_info(F.col("content")).alias("info"),
+            W.wav_stats(F.col("content")).alias("stats"),
         )
         return out.select(
             "doc_id",
@@ -1264,7 +1260,7 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.flac import decode_flac, encode_flac
-    from ..functions.wav import synth_wav_md5, wav_pcm16_samples
+    from ..functions.wav import synth_wav_md5, wav_pcm16_frames
 
     d = _doc_ids(spark, sf_dir)
 
@@ -1290,16 +1286,13 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from audios_to_dataset_spark.functions.wav import parse_wav_header
-
         rows = []
         for b in content:
-            bb = bytes(b) if b is not None else None
-            s = wav_pcm16_samples(bb)
-            if s is None:
+            parsed = wav_pcm16_frames(bytes(b) if b is not None else None)
+            if parsed is None:
                 rows.append((None, None, None, None))
                 continue
-            _dur, sr = parse_wav_header(bb)
+            s, sr, _ch = parsed
             flac = encode_flac(s, sr)
             got = decode_flac(flac)
             ok = (
@@ -1364,7 +1357,7 @@ def q_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.wav import synth_wav_md5, wav_pcm16_samples
+    from ..functions.wav import synth_wav_md5, wav_pcm16_frames
 
     d = _doc_ids(spark, sf_dir)
 
@@ -1387,16 +1380,13 @@ def q_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from audios_to_dataset_spark.functions.wav import parse_wav_header
-
         rows = []
         for b in content:
-            bb = bytes(b) if b is not None else None
-            s = wav_pcm16_samples(bb)
-            if s is None or s.size < 2:
+            parsed = wav_pcm16_frames(bytes(b) if b is not None else None)
+            if parsed is None or parsed[0].size < 2:
                 rows.append((None, None, None))
                 continue
-            _dur, sr = parse_wav_header(bb)
+            s, sr, _ch = parsed
             v = s.astype(np.int64)
             zc = int(((v[1:] * v[:-1]) < 0).sum())
             rows.append((s.size, zc, zc * sr / s.size))
@@ -3358,15 +3348,8 @@ def q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         rows = []
         for i in ids:
-            data = W.synth_wav_md5(int(i))
-            _dur, sr = W.parse_wav_header(data)
-            _r, _p, _c, n_in = W.wav_pcm_stats(data)
-            # re-decode the raw ints for the interpolation (stats are
-            # normalized; interp runs on the [-1, 1) samples)
-            import struct as _s
-
-            body = data[44:]
-            x = np.frombuffer(body, dtype="<i2").astype(np.float64) / 32768.0
+            s, sr, _ch = W.wav_pcm16_frames(W.synth_wav_md5(int(i)))
+            x = s.astype(np.float64) / 32768.0
             y = W.resample_linear(x, sr, RESAMPLE_SR)
             rows.append(
                 (

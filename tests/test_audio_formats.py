@@ -82,9 +82,7 @@ def test_wav_still_delegates():
 def test_udf_batch(spark):
     from pyspark.sql import functions as F
 
-    from audios_to_dataset_spark.functions.audio_formats import (
-        with_audio_info,
-    )
+    from audios_to_dataset_spark.functions.audio_formats import audio_info
 
     df = spark.createDataFrame(
         [(1, _flac_bytes()), (2, b"junk")], "id long, content binary"
@@ -92,7 +90,7 @@ def test_udf_batch(spark):
     rows = {
         r.id: r.a
         for r in df.select(
-            "id", with_audio_info(F.col("content")).alias("a")
+            "id", audio_info(F.col("content")).alias("a")
         ).collect()
     }
     assert rows[1].format == "flac" and rows[1].sampling_rate == 44100

@@ -36,9 +36,12 @@ from audios_to_dataset_spark.functions.vp8l import (
     encode_vp8l_lz77,
 )
 from audios_to_dataset_spark.functions.wav import (
+    downmix_stereo,
     parse_wav_header,
+    segment_wav_bytes,
     synth_wav,
     wav_pcm16_frames,
+    wav_pcm16_samples,
     wav_pcm_stats,
 )
 
@@ -62,7 +65,10 @@ def _mutate(rng: np.random.RandomState, blob: bytes) -> bytes:
 def _wav_all(b: bytes):
     parse_wav_header(b)
     wav_pcm16_frames(b)
+    wav_pcm16_samples(b)
     wav_pcm_stats(b)
+    downmix_stereo(b)
+    segment_wav_bytes(b, 0.005)
 
 
 def test_decoders_never_raise_on_mutated_valid_streams():
@@ -132,10 +138,12 @@ def test_decoders_never_raise_on_mutated_valid_streams():
         # master-element and continued-packet states
         ("ogg", synth_ogg_stream(7), parse_ogg_pages),
         ("ebml", synth_ebml(7), parse_ebml),
+        # stereo reaches downmix_stereo's decode path
+        ("wav_stereo", synth_wav(16000, 150, channels=2), _wav_all),
     ]
     for name, blob, dec in cases:
         # the unmutated stream must decode (guards the fixture itself)
-        assert dec(blob) is not None or name == "wav"
+        assert dec(blob) is not None or dec is _wav_all
         for t in range(TRIALS):
             mutated = _mutate(rng, blob)
             try:

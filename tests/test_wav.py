@@ -7,6 +7,8 @@ of exactly `sample_rate` samples → duration exactly 1.0 s; parse failures
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 
 from audios_to_dataset_spark.functions.wav import parse_wav_header, synth_wav
@@ -72,9 +74,8 @@ def test_segment_wav_bytes_roundtrip():
 
 
 def test_segment_wavs_spark(spark, tmp_path):
-    import os
-
-    from audios_to_dataset_spark.functions.wav import segment_wavs, synth_wav
+    from audios_to_dataset_spark.functions.wav import synth_wav
+    from audios_to_dataset_spark.pipeline import segment_files
     from audios_to_dataset_spark.sources.binary_scan import scan_audio_files
 
     for i in range(3):
@@ -82,15 +83,17 @@ def test_segment_wavs_spark(spark, tmp_path):
             synth_wav(16000, n_samples=16000 * (i + 1))
         )
     files = scan_audio_files(spark, str(tmp_path))
-    segs = segment_wavs(files, seg_seconds=1.0).collect()
+    segs = segment_files(files, seg_seconds=1.0).collect()
     # 1 + 2 + 3 one-second segments
     assert len(segs) == 6
     by_file = {}
     for r in segs:
-        by_file.setdefault(os.path.basename(r.path), []).append(r)
+        by_file.setdefault(r.relative_path, []).append(r)
     assert sorted(len(v) for v in by_file.values()) == [1, 2, 3]
-    assert all(r.seg_duration == 1.0 for r in segs)
-    assert all(r.seg_bytes[:4] == b"RIFF" for r in segs)
+    assert all(
+        parse_wav_header(bytes(r.content)) == (1.0, 16000) for r in segs
+    )
+    assert all(bytes(r.content)[:4] == b"RIFF" for r in segs)
 
 
 def test_wav_stats_sine(spark):
@@ -99,15 +102,12 @@ def test_wav_stats_sine(spark):
 
     from pyspark.sql import functions as F
 
-    from audios_to_dataset_spark.functions.wav import (
-        synth_wav,
-        with_wav_stats,
-    )
+    from audios_to_dataset_spark.functions.wav import synth_wav, wav_stats
 
     df = spark.createDataFrame(
         [(synth_wav(sample_rate=8000),)], "content binary"
     )
-    row = df.select(with_wav_stats(F.col("content")).alias("s")).select(
+    row = df.select(wav_stats(F.col("content")).alias("s")).select(
         "s.*"
     ).collect()[0]
     assert row.n_samples == 8000
@@ -120,16 +120,13 @@ def test_wav_stats_sine(spark):
 def test_wav_stats_silence_and_garbage(spark):
     from pyspark.sql import functions as F
 
-    from audios_to_dataset_spark.functions.wav import (
-        synth_wav,
-        with_wav_stats,
-    )
+    from audios_to_dataset_spark.functions.wav import synth_wav, wav_stats
 
     silent = synth_wav(sample_rate=1000, freq_hz=0.0)
     df = spark.createDataFrame(
         [(silent,), (b"not a wav",), (None,)], "content binary"
     )
-    rows = df.select(with_wav_stats(F.col("content")).alias("s")).select(
+    rows = df.select(wav_stats(F.col("content")).alias("s")).select(
         "s.*"
     ).collect()
     assert rows[0].rms == 0.0 and rows[0].n_samples == 1000
@@ -401,19 +398,17 @@ def test_wave_format_extensible():
 def test_vad_segments():
     """vad_segments: frame windowing, threshold, run merging, trailing
     partial-window drop, and undecodable fallback."""
-    import struct as _s
-
     from audios_to_dataset_spark.functions.wav import (
+        pcm_fmt,
         synth_wav_vad,
         vad_segments,
+        wav_bytes,
     )
 
     # hand-built: 3 frames voiced-silent-voiced + 10 trailing samples
     def wav(samples):
-        body = b"".join(_s.pack("<h", x) for x in samples)
-        hdr = b"RIFF" + _s.pack("<I", 36 + len(body)) + b"WAVE"
-        fmt = b"fmt " + _s.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-        return hdr + fmt + b"data" + _s.pack("<I", len(body)) + body
+        body = struct.pack(f"<{len(samples)}h", *samples)
+        return wav_bytes(pcm_fmt(1, 1, 8000, 16), body)
 
     loud = [9000 if i % 2 == 0 else -9000 for i in range(40)]
     sig = loud + [0] * 40 + loud + [9000] * 10  # partial tail dropped
@@ -429,3 +424,144 @@ def test_vad_segments():
     assert got is not None and got[0] == 6 + 7 % 5
     assert vad_segments(b"nope") is None
     assert vad_segments(None) is None
+
+
+def _chunk(cid: bytes, body: bytes, size: int | None = None) -> bytes:
+    size = len(body) if size is None else size
+    return cid + struct.pack("<I", size) + body + b"\x00" * (len(body) & 1)
+
+
+def _riff(*chunks: bytes, form: bytes = b"WAVE") -> bytes:
+    payload = form + b"".join(chunks)
+    return b"RIFF" + struct.pack("<I", len(payload)) + payload
+
+
+def _fmt(channels: int, rate: int = 4, extra: bytes = b"") -> bytes:
+    align = 2 * channels
+    return _chunk(
+        b"fmt ",
+        struct.pack("<HHIIHH", 1, channels, rate, rate * align, align, 16)
+        + extra,
+    )
+
+
+def _data(*vals: int, size: int | None = None) -> bytes:
+    return _chunk(b"data", struct.pack(f"<{len(vals)}h", *vals), size)
+
+
+def test_downmix_stereo_rejects_non_wave_riff():
+    """A RIFF form other than WAVE (here AVI) is not a WAV, even when it
+    carries 16-bit stereo fmt and data chunks: downmix_stereo follows
+    the same RIFF…WAVE rule as every other reader."""
+    from audios_to_dataset_spark.functions.wav import downmix_stereo
+
+    wave = _riff(_fmt(2), _data(7, 8, 9, 10))
+    assert downmix_stereo(wave)[1] == 4
+    avi = _riff(_fmt(2), _data(7, 8, 9, 10), form=b"AVI ")
+    assert downmix_stereo(avi) == ([], 0)
+
+
+_PCM = (1, -2, 3, -4, 5, -6)
+_MONO_OK = (
+    (1.5, 4),
+    (0.00011884889165799889, 0.00018310546875, 0.0, 6),
+    list(_PCM),
+    (list(_PCM), 4, 1),
+    ([], 0),
+    [(0, 0.0, 0.5, 48), (1, 0.5, 0.5, 48), (2, 1.0, 0.5, 48)],
+)
+_ALL_FAIL = ((0.0, 0), (0.0, 0.0, 0.0, 0), None, None, ([], 0), [])
+
+# name -> (file, expected output of each reader). The expected values
+# pin the chunk grammar the readers had before they shared read_wav.
+# 4 Hz, so a 0.5 s segment is two frames.
+WAV_EDGE_CASES = {
+    "list_before_fmt": (
+        _riff(_chunk(b"LIST", b"INFOx"), _fmt(1), _data(*_PCM)), _MONO_OK
+    ),
+    "data_before_fmt": (_riff(_data(*_PCM), _fmt(1)), _MONO_OK),
+    "two_data_chunks_last_wins": (
+        _riff(_fmt(2), _data(7, 8), _data(10, 20, 30, -40, 50, 61)),
+        (
+            (0.75, 4),
+            (0.0011963643160655068, 0.001861572265625, 0.0, 6),
+            [10, 20, 30, -40, 50, 61],
+            ([10, 20, 30, -40, 50, 61], 4, 2),
+            ([0.000457763671875, -0.000152587890625, 0.0016937255859375],
+             4),
+            [(0, 0.0, 0.5, 52), (1, 0.5, 0.25, 48)],
+        ),
+    ),
+    "fmt_shorter_than_16": (
+        _riff(_chunk(b"fmt ", _fmt(1)[8:22]), _data(*_PCM)), _ALL_FAIL
+    ),
+    "short_fmt_after_valid_fmt": (
+        _riff(_fmt(1), _chunk(b"fmt ", bytes(14)), _data(*_PCM)), _MONO_OK
+    ),
+    "data_size_past_eof": (
+        _riff(_fmt(1), _data(*_PCM, size=1000)), _MONO_OK
+    ),
+    "empty_data_chunk": (
+        _riff(_fmt(1), _data()),
+        ((0.0, 4), (0.0, 0.0, 0.0, 0), None, None, ([], 0), []),
+    ),
+    "pcm16_9_channels": (
+        _riff(_fmt(9), _data(*range(18))),
+        (
+            (0.5, 4),
+            (0.00030390155530374464, 0.000518798828125, 0.0, 18),
+            list(range(18)),
+            None,
+            ([], 0),
+            [(0, 0.0, 0.5, 80)],
+        ),
+    ),
+    "odd_length_fmt_body": (
+        _riff(_fmt(1, extra=b"\x07"), _data(*_PCM)),
+        _MONO_OK[:5]
+        + ([(0, 0.0, 0.5, 50), (1, 0.5, 0.5, 50), (2, 1.0, 0.5, 50)],),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(WAV_EDGE_CASES))
+def test_wav_readers_edge_cases(case):
+    from audios_to_dataset_spark.functions.wav import (
+        downmix_stereo,
+        segment_wav_bytes,
+        wav_pcm16_frames,
+        wav_pcm16_samples,
+        wav_pcm_stats,
+    )
+
+    b, want = WAV_EDGE_CASES[case]
+    s = wav_pcm16_samples(b)
+    f = wav_pcm16_frames(b)
+    got = (
+        parse_wav_header(b),
+        wav_pcm_stats(b),
+        None if s is None else s.tolist(),
+        None if f is None else (f[0].tolist(), f[1], f[2]),
+        downmix_stereo(b),
+        [(i, st, d, len(r)) for i, st, d, r in segment_wav_bytes(b, 0.5)],
+    )
+    assert got == want
+
+
+def test_segment_odd_length_fmt_body_is_padded():
+    """A 17-byte fmt body is copied verbatim into every segment, followed
+    by one pad byte, and the RIFF size counts that pad byte."""
+    from audios_to_dataset_spark.functions.wav import segment_wav_bytes
+
+    b, _ = WAV_EDGE_CASES["odd_length_fmt_body"]
+    segs = [r for *_, r in segment_wav_bytes(b, 0.5)]
+    head = (
+        "524946462a00000057415645"  # RIFF, size 42, WAVE
+        "666d742011000000"  # fmt , 17 bytes
+        "01000100040000000800000002001000" "07" "00"  # body + pad
+        "6461746104000000"  # data, 4 bytes
+    )
+    assert [r.hex() for r in segs] == [
+        head + "0100feff", head + "0300fcff", head + "0500faff"
+    ]
+    assert all(parse_wav_header(r) == (0.5, 4) for r in segs)
